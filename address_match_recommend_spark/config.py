@@ -202,9 +202,6 @@ class PipelineConfig:
     #: under a durable Checkpointer too (round 5: per-stage ledger
     #: subdirectories remove the append race).
     concurrent_stages: bool = True
-    shuffle_partitions: int = 32
-    #: repartition width for the pair-scoring stage; scale with cluster size
-    score_partitions: int | None = None
 
     # --- checkpointing ---
     checkpoint_dir: str | None = None

@@ -157,46 +157,24 @@ def connected_components(
     n_edges = e.count()
     if n_edges <= cfg.cc_driver_max_edges:
         return _driver_union_find(e)
-    # Right-size the loop's shuffle width to the edge count: every
-    # iteration is 2 shuffles + a checkpoint + a collect, and running a
-    # 10k-edge iteration at the corpus-wide partition count pays ~100×
-    # more task-scheduling overhead than data processing (measured 2.2×
-    # on the whole loop). ~250k edges per partition keeps partitions in
-    # memory at any scale. CAVEAT: spark.sql.shuffle.partitions is
-    # session-global, so the temporary override below is visible to any
-    # query that starts on this session DURING the loop — the pipeline
-    # is strictly sequential so this never happens here; callers running
-    # concurrent queries on a shared session should clone a session
-    # (spark.newSession()) for the CC call. (AQE advisory-size
-    # coalescing was tried as a race-free alternative and rejected: it
-    # also coalesced the compute-heavy scoring shuffles and wrecked
-    # their core scaling — see session.py.)
-    spark = e.sparkSession
-    # Floor at the session's core count: the round-2 floor of 4 capped
-    # every CC shuffle at 4 tasks, idling half the executors at local[8]
-    # (measured: the clusters stage scaled 13.0 s @ 2 cores → only
-    # 9.2 s @ 8). Data-proportional above that, so a 10k-edge loop still
-    # avoids corpus-width task-scheduling overhead.
-    parts = max(
-        spark.sparkContext.defaultParallelism,
-        min(cfg.shuffle_partitions, 1 + n_edges // 250_000),
-    )
-    prev_conf = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        prev_sig = None
-        for _ in range(cfg.max_cc_iterations):
-            # lazy checkpoint + signature = ONE job per iteration: the
-            # signature's aggregate materializes the checkpoint blocks
-            # (round-3: the eager checkpoint ran a separate job first,
-            # doubling the loop's driver-synchronized job count)
-            e = materialize(_small_star(_large_star(e)), cfg, eager=False)
-            sig = _signature(e)
-            if sig == prev_sig:
-                break
-            prev_sig = sig
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_conf)
+    # The loop's shuffles run at the session's shuffle width, which is
+    # host-sized by default (session.py): every iteration is 2 shuffles +
+    # a checkpoint + a collect, so a width far above the slot count pays
+    # more task scheduling than data processing. The loop never sets the
+    # session conf: a temporary width override would race any query
+    # running concurrently on the session (a StreamingER foreachBatch,
+    # user threads).
+    prev_sig = None
+    for _ in range(cfg.max_cc_iterations):
+        # lazy checkpoint + signature = ONE job per iteration: the
+        # signature's aggregate materializes the checkpoint blocks
+        # (round-3: the eager checkpoint ran a separate job first,
+        # doubling the loop's driver-synchronized job count)
+        e = materialize(_small_star(_large_star(e)), cfg, eager=False)
+        sig = _signature(e)
+        if sig == prev_sig:
+            break
+        prev_sig = sig
 
     # converged edge set is a forest of stars child → root
     assign = e.groupBy("u").agg(F.min("v").alias("entity_id"))

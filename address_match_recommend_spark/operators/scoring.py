@@ -4,9 +4,9 @@ Analog of the reference's ``computeDocSimilarity``
 (/root/reference/core/similarity.go:432-549): accumulate ΣqW·dW, ΣqW², ΣdW²
 over matched terms and take cosine = sumQD/√(sumQQ·sumDD) (:540). There it
 is a per-pair Go loop with a lazy TermsMap hash probe
-(/root/reference/models/document.go:26-39); here the whole computation is a
-single JVM expression — ``map_zip_with`` merges the two token→weight maps
-and ``aggregate`` folds the products — inside whole-stage codegen. No
+(/root/reference/models/document.go:26-39); here it is a sparse dot
+product by join — both sides' weight maps exploded to (conv_id, token, w),
+equi-joined on (pair, token) and summed per pair — all JVM-side. No
 Python touches the hot path; norms were precomputed in the vectors stage so
 score(x, x) = 1 exactly (the reference's own README admits its scores
 don't reach 1.0 on identical strings, README.md:141-142 — a quirk we fix,
@@ -24,22 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig
 from ..functions.jaro_winkler import make_jw_udf
-
-
-def cosine_expr(va, vb, norm_a, norm_b):
-    """Column: cosine similarity of two map<string,double> TF-IDF vectors.
-
-    NOTE: kept for API/testing convenience. Catalyst's MapData is an
-    unsorted array — ``map_zip_with`` probes it linearly per key, making
-    this O((n+m)²) string comparisons per pair (measured ~40 core-ms on
-    ~110-token conversations). The hot path uses the exploded-join dot
-    product in :func:`score_pairs` instead."""
-    prods = F.map_zip_with(
-        va, vb, lambda _, x, y: F.coalesce(x, F.lit(0.0)) * F.coalesce(y, F.lit(0.0))
-    )
-    dot = F.aggregate(F.map_values(prods), F.lit(0.0), lambda acc, v: acc + v)
-    denom = norm_a * norm_b
-    return F.when(denom > 0, dot / denom).otherwise(F.lit(0.0))
+from ..session import shuffle_width
 
 
 def score_pairs(
@@ -55,14 +40,8 @@ def score_pairs(
     (equi-joins on conv_id — sized by |pairs|, AQE picks the strategy), then
     evaluates cosine JVM-side. If ``conversations`` is given, borderline
     pairs additionally fetch canonical_text and get a Jaro-Winkler score.
-
-    The scoring stage is repartitioned explicitly when
-    cfg.score_partitions is set (north rule: explicit repartitioning) —
-    otherwise AQE's coalescing decides.
     """
     cfg = cfg or PipelineConfig()
-    if cfg.score_partitions:
-        pairs = pairs.repartition(cfg.score_partitions, "conv_id_a")
 
     # Sparse dot product by join (the sparse-matrix-product pattern):
     # explode each side's weight map to (conv_id, token, w), equi-join on
@@ -237,7 +216,7 @@ def score_pairs(
         # the post-join partitions and serialize the compute-bound
         # O(prefix²) JW work onto a couple of cores (same pathology as
         # the CC-loop advisory-size experiment, session.py).
-        .repartition(cfg.shuffle_partitions)
+        .repartition(shuffle_width(scored.sparkSession))
         .withColumn("jw", jw_udf("text_a", "text_b"))
         .drop("text_a", "text_b")
     )

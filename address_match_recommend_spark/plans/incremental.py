@@ -36,6 +36,20 @@ Strategy (anti-join + re-cluster of affected blocks, SURVEY §2.10):
 Every input here is a checkpointed stage of the previous run
 (conversations, representatives, idf, postings, clusters) — the
 incremental job reads the ledger, never the old raw turns.
+
+Every frame read more than once goes through ``materialize`` rather
+than ``persist``, as ``run_pipeline``'s stages do. Two reasons, both
+fixed per-batch costs independent of batch size:
+
+- ``persist`` caches data but keeps the lineage, so every later action
+  re-plans the whole accumulated DAG driver-side (materialize.py).
+- A persisted frame stays in the session's cache manager until someone
+  unpersists it, and nothing here can do so safely (the caller reads the
+  result frames after return): a long-lived streaming session would
+  gain seven cache entries per batch. Checkpointed blocks belong to
+  their RDD and are released when it is garbage-collected.
+
+``cfg.reliable_checkpoint`` still applies (materialize.py).
 """
 
 from __future__ import annotations
@@ -46,6 +60,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig
 from ..functions.tokenize import explode_tokens
+from ..materialize import materialize
 from ..operators.blocking import postings as build_postings
 from ..operators.canonicalize import canonicalize
 from ..operators.clustering import connected_components
@@ -87,9 +102,13 @@ def incremental_update(
     cfg = cfg or PipelineConfig()
 
     # 1. canonicalize the batch only; drop conv_ids we already have
-    new_conv = canonicalize(new_transcripts, cfg).join(
-        prev_conversations.select("conv_id"), "conv_id", "left_anti"
-    ).persist()
+    new_conv = materialize(
+        canonicalize(new_transcripts, cfg).join(
+            prev_conversations.select("conv_id"), "conv_id", "left_anti"
+        ),
+        cfg,
+        eager=False,  # materialized by the count below
+    )
     n_new = new_conv.count()
 
     conversations = prev_conversations.unionByName(new_conv)
@@ -107,9 +126,12 @@ def incremental_update(
         )
     )
     # representatives among the new batch itself (intra-batch dups collapse)
-    new_reps = dedup_exact(new_conv).join(
-        prev_hashes.select("text_hash"), "text_hash", "left_anti"
-    ).persist()
+    new_reps = materialize(
+        dedup_exact(new_conv).join(
+            prev_hashes.select("text_hash"), "text_hash", "left_anti"
+        ),
+        cfg,
+    )
     representatives = prev_representatives.unionByName(new_reps)
     dup_edges_new = (
         new_conv.select("conv_id", "text_hash")
@@ -142,8 +164,7 @@ def incremental_update(
             tok.withColumn("token", F.xxhash64("token")) if state_hashed else tok
         )
 
-    new_tokens = _domain(explode_tokens(new_reps, cfg)).persist()
-    new_tokens.count()
+    new_tokens = materialize(_domain(explode_tokens(new_reps, cfg)), cfg)
     new_vectors = tfidf_vectors(new_tokens, prev_idf, cfg)
 
     # Blocking IDF: tokens the old corpus never saw (e.g. the signature
@@ -202,8 +223,7 @@ def incremental_update(
 
     # 4. pairs only from blocks containing a new conversation
     new_post = build_postings(new_tokens, blocking_idf, cfg)
-    all_post = prev_postings.unionByName(new_post).persist()
-    all_post.count()
+    all_post = materialize(prev_postings.unionByName(new_post), cfg)
     postings_new_side = new_post.select(
         "token", F.col("conv_id").alias("new_id")
     )
@@ -237,8 +257,7 @@ def incremental_update(
         )
     )
     old_vectors = tfidf_vectors(old_partner_tokens, prev_idf, cfg)
-    vectors = new_vectors.unionByName(old_vectors).persist()
-    vectors.count()
+    vectors = materialize(new_vectors.unionByName(old_vectors), cfg)
 
     scored = score_pairs(pairs, vectors, representatives, cfg)
     match_edges = scored.filter(F.col("is_match")).select("conv_id_a", "conv_id_b")
@@ -251,9 +270,9 @@ def incremental_update(
     #    (/root/reference/core/similarity.go:551-581). Only components the
     #    batch's edges TOUCH re-cluster now; everything else inherits its
     #    label without being read into the CC job or rewritten.
-    new_edges = (
-        match_edges.unionByName(dup_edges_old).unionByName(dup_edges_new)
-    ).persist()
+    new_edges = materialize(
+        match_edges.unionByName(dup_edges_old).unionByName(dup_edges_new), cfg
+    )
     endpoints = (
         new_edges.select(F.col("conv_id_a").alias("conv_id"))
         .unionByName(new_edges.select(F.col("conv_id_b").alias("conv_id")))
@@ -267,9 +286,9 @@ def incremental_update(
     # every member of a touched cluster enters the subgraph: a merge can
     # relabel ALL of them, and the merged label (component-min conv_id)
     # must be the min over the full membership of every cluster involved
-    touched_members = prev_clusters.join(
-        touched_entities, "entity_id", "left_semi"
-    ).persist()
+    touched_members = materialize(
+        prev_clusters.join(touched_entities, "entity_id", "left_semi"), cfg
+    )
     star_edges = touched_members.filter(
         F.col("conv_id") != F.col("entity_id")
     ).select(
@@ -311,7 +330,7 @@ def incremental_update(
         metrics={
             "n_new_conversations": n_new,
             # localized-clustering observability (both frames are
-            # persisted and O(affected) by design): a touched-member
+            # materialized and O(affected) by design): a touched-member
             # count approaching the corpus size means the batch bridged
             # nearly every cluster — or a blocking bug admitted one
             "n_new_edges": new_edges.count(),

@@ -42,6 +42,7 @@ from ..operators.clustering import assign_entities, connected_components
 from ..operators.dedup import dedup_exact, exact_dup_edges
 from ..operators.scoring import score_pairs, top_k_matches
 from ..operators.tfidf import idf_table, tfidf_vectors
+from ..session import shuffle_width
 
 #: execution order of the named stages ``until`` can stop at
 STAGE_ORDER = (
@@ -175,8 +176,8 @@ def run_pipeline(
     )
     if not want("representatives"):
         return result()
-    # Repartitioned to full stage width BEFORE materializing: AQE
-    # coalesces the dedup shuffle by the COMPACT frame's bytes (9
+    # Repartitioned to the session's shuffle width BEFORE materializing:
+    # AQE coalesces the dedup shuffle by the COMPACT frame's bytes (9
     # partitions at 50k ents), but every consumer explodes it ~200× —
     # the token stream's map side would run 9 skewed tasks regardless of
     # core count (measured: a straggler tail pinning the tokenize stage
@@ -184,7 +185,9 @@ def run_pipeline(
     # 8). The repartition itself shuffles only the compact rows.
     reps = fields["representatives"] = ckpt(
         "representatives",
-        lambda: dedup_exact(conversations).repartition(cfg.shuffle_partitions),
+        lambda: dedup_exact(conversations).repartition(
+            shuffle_width(transcripts.sparkSession)
+        ),
     )
     dup_edges = fields["dup_edges"] = exact_dup_edges(conversations)
     if not want("tokenize"):

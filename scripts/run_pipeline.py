@@ -86,7 +86,6 @@ def main() -> None:
         else None
     )
     cfg = PipelineConfig(
-        shuffle_partitions=args.shuffle_partitions or 32,
         reliable_checkpoint=args.reliable,
         checkpoint_dir=args.checkpoint,
     )

@@ -12,13 +12,11 @@ from address_match_recommend_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(
-        app_name="tests",
-        cores=8,
-        shuffle_partitions=8,
-        driver_memory="16g",
-    )
-    yield s
+    """Sized to the host by ``get_spark``'s defaults: cores from
+    ``SPARK_GRAFT_CPUS`` (all cores when unset), driver heap 60% of
+    MemTotal, shuffle width = slot count — the tests exercise the width
+    the engine ships with."""
+    yield get_spark(app_name="tests")
 
 
 @pytest.fixture(scope="module", autouse=True)

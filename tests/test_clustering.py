@@ -70,3 +70,24 @@ def test_assign_entities_singletons(spark):
     )
     got = {r["conv_id"]: r["entity_id"] for r in assign_entities(conv, comps).collect()}
     assert got == {"a": "a", "b": "a", "c": "c", "lone": "lone"}
+
+
+def test_distributed_loop_leaves_session_width_alone(spark, monkeypatch):
+    """The distributed loop must not touch the session-global shuffle
+    width: a temporary override would leak into any query running
+    concurrently on the session."""
+    conf_cls = type(spark.conf)
+    original_set = conf_cls.set
+    set_keys = []
+
+    def recording_set(self, key, value):
+        set_keys.append(key)
+        return original_set(self, key, value)
+
+    monkeypatch.setattr(conf_cls, "set", recording_set)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    nodes = [f"n{i:02d}" for i in range(33)]
+    got = _cc(spark, list(zip(nodes, nodes[1:])), PipelineConfig(cc_driver_max_edges=0))
+    assert set(got.values()) == {"n00"}
+    assert "spark.sql.shuffle.partitions" not in set_keys
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before

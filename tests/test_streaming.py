@@ -542,3 +542,32 @@ def test_compact_folds_chain_into_new_base(spark, er_state):
     ]), 2)
     got = {(r["conv_id"], r["entity_id"]) for r in er.read_clusters().collect()}
     assert got == before | {("x4", "o3")}
+
+
+def test_apply_batch_leaves_session_cache_empty(spark, tiny_corpus, tmp_path):
+    """A micro-batch must not leave cached frames behind: persisted
+    frames stay in the session's cache manager until unpersisted, so a
+    long-lived streaming session would grow it by every batch's reused
+    frames. Checkpointed frames (materialize.py) do not enter it."""
+    from address_match_recommend_spark.datagen import TRANSCRIPTS_DDL
+    from address_match_recommend_spark.streaming.incremental import StreamingER
+
+    tr, clusters = tiny_corpus.transcripts, tiny_corpus.expected_clusters
+    entities = sorted(clusters["entity_id"].unique())
+    batches = [entities[-4:-2], entities[-2:]]
+    late = set(entities[-4:])
+    in_batch = tr["conv_id"].isin(clusters[clusters["entity_id"].isin(late)]["conv_id"])
+
+    er = StreamingER(spark, str(tmp_path / "state"))
+    er.bootstrap(spark.createDataFrame(tr[~in_batch], schema=TRANSCRIPTS_DDL))
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    for batch_id, ents in enumerate(batches):
+        ids = clusters[clusters["entity_id"].isin(ents)]["conv_id"]
+        er.apply_batch(
+            spark.createDataFrame(tr[tr["conv_id"].isin(ids)], schema=TRANSCRIPTS_DDL),
+            batch_id,
+        )
+    assert er._committed_versions() == [0, 1, 2]
+    assert cache.isEmpty()
