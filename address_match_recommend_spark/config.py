@@ -77,7 +77,8 @@ class PipelineConfig:
     #: tokens appearing in only one conversation generate no pairs
     min_block_df: int = 2
     #: posting lists longer than this are salted into ceil(df/salt_bucket)
-    #: sub-blocks to break hot-key skew in the pair join
+    #: sub-blocks to break hot-key skew in the pair join — on the batch and
+    #: the incremental path alike (one operator, operators/blocking.py)
     salt_bucket: int = 50
     #: per-conversation cap on blocking tokens (rarest-first), bounding the
     #: candidate-pair budget per record
@@ -101,6 +102,7 @@ class PipelineConfig:
     #: UNDERcount — min_shared_tokens stays precision-safe, and the
     #: count is exact for conversations with ≤ cap blockable tokens.
     #: Irrelevant when the budget is on (the set is already ≤ budget).
+    #: Applies to the batch and the incremental path alike.
     toks_payload_cap: int = 256
     #: reference-parity recall mode: admit a pair on a single shared
     #: SALTED blocking key even below min_shared_tokens (the reference
@@ -114,6 +116,8 @@ class PipelineConfig:
     #: pairs per hot token, i.e. O(df·salt_bucket/2) — linear in df, not
     #: quadratic, but unbounded across hot tokens. Turn on only when
     #: recall of single-hot-token matches matters more than scoring cost.
+    #: Governs the batch and the incremental path alike, together with
+    #: single_salted_pair_budget below.
     admit_single_salted: bool = False
     #: hard per-hot-token budget on bypass-admitted pairs when
     #: admit_single_salted is ON (round-2 ask, closed r4): each (token,
@@ -179,29 +183,6 @@ class PipelineConfig:
     #: with executors and the exact distributed loop runs). 2M edges ≈
     #: tens of MB of id pairs — the same order as a broadcast side.
     cc_driver_max_edges: int = 2_000_000
-
-    # --- runtime ---
-    #: materialize the exploded token stream (conv_id, pos, token) as its
-    #: own checkpointed stage. OFF by default (round 4): the explode is a
-    #: narrow, cheap map over the already-materialized representatives
-    #: (measured at 50k ents: ≤10 s of compute at 2 AND 8 cores), while
-    #: checkpointing its ~200×-inflated output is a bandwidth-bound block
-    #: write (60-82 s) that no core count speeds up — the single worst
-    #: scaling stage in the whole-job N→4N recordings. Each consumer
-    #: (idf, vectors, postings) instead re-runs the explode inside its
-    #: own shuffle's map side. Turn ON when the tokenizer itself is
-    #: expensive enough to out-cost the write — the dictionary-segmenter
-    #: pandas UDF (cfg.dictionary) on large CJK payloads is the one
-    #: known case.
-    materialize_tokens: bool = False
-    #: submit independent pipeline stage branches (tokens→vectors vs
-    #: tokens→idf→postings→pairs) from concurrent driver threads so
-    #: their per-stage driver constants (planning + scheduling — the
-    #: core-count-independent Amdahl term) overlap instead of summing;
-    #: tasks share slots via FAIR scheduler pools (session.py). Works
-    #: under a durable Checkpointer too (round 5: per-stage ledger
-    #: subdirectories remove the append race).
-    concurrent_stages: bool = True
 
     # --- checkpointing ---
     checkpoint_dir: str | None = None

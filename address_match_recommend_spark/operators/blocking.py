@@ -9,7 +9,10 @@ O(N·Q) nested loop, /root/reference/core/similarity.go:74-79).
 Here blocking is a DataFrame-materialized inverted index — posting lists
 token → conv_id — and candidate generation is a posting-list self-join
 (`a.conv_id < b.conv_id` triangular pruning), the standard distributed
-sparse-similarity design. Three explicit skew/scale controls (north rule):
+sparse-similarity design. The incremental write path joins a batch's
+postings to the whole index through the same operator, so one rule
+decides what counts as a candidate, as the reference's insert and lookup
+share one index. Three explicit skew/scale controls (north rule):
 
 1. **df cap** — tokens with df > max_block_df never block (they carry ~zero
    IDF and would quadratically explode the join). Tokens with df < 2
@@ -79,8 +82,28 @@ def postings(
     return post.drop("clamped") if has_clamped else post
 
 
-def candidate_pairs(post: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
+def candidate_pairs(
+    post: DataFrame,
+    cfg: PipelineConfig | None = None,
+    new: DataFrame | None = None,
+) -> DataFrame:
     """(conv_id_a, conv_id_b) distinct, a < b.
+
+    The one candidate-pair operator of both write paths. ``new=None`` is
+    the batch path: a self-join of ``post`` on ``a.conv_id < b.conv_id``.
+    ``new`` (the incremental path, plans/incremental.py) holds a batch's
+    postings and ``post`` all postings (old ∪ new); the new side is then
+    joined to the all side on ``a.conv_id != b.conv_id``, so only blocks
+    containing a new conversation produce pairs. Both paths salt, count
+    and budget by the same rules below.
+
+    The all side is restricted to the new side's tokens, keeping the
+    per-batch work O(batch blocks) rather than O(corpus). The shared-token
+    count stays exact: every pair has a new endpoint, whose budgeted token
+    set lies inside those tokens. The all side also takes each token's df
+    from the new side, not from its stored row: postings of a token the
+    bootstrap IDF never saw carry the df of the batch that wrote them,
+    and both sides must agree on ``n_salts`` to meet in one sub-block.
 
     Hot posting lists are salted: block key becomes (token, salt) with
     salt = pmod(xxhash64(conv_id), ceil(df / salt_bucket)) — deterministic
@@ -98,7 +121,7 @@ def candidate_pairs(post: DataFrame, cfg: PipelineConfig | None = None) -> DataF
        a pair sharing one hot token plus any other blockable token passes
        threshold 2.
 
-    The true count is computed INSIDE the self-join projection: each
+    The true count is computed INSIDE the join projection: each
     posting row carries its conversation's full budgeted token set as a
     sorted array of xxhash64 hashes (≤ max_block_tokens_per_conv longs,
     built by one window aggregate that reuses the postings stage's
@@ -125,59 +148,71 @@ def candidate_pairs(post: DataFrame, cfg: PipelineConfig | None = None) -> DataF
     """
     cfg = cfg or PipelineConfig()
     need_count = cfg.min_shared_tokens > 1
-    n_salts = F.greatest(
-        F.ceil(F.col("df") / F.lit(cfg.salt_bucket)).cast("int"), F.lit(1)
-    )
-    cols = ["token", "salt", "conv_id"]
-    if cfg.admit_single_salted:
-        cols.append("n_salts")  # the bypass budget scales per sub-block
-    salted = (
-        post.withColumn("n_salts", n_salts)
-        .withColumn("salt", F.pmod(F.xxhash64("conv_id"), F.col("n_salts")).cast("int"))
-        .select(*cols, (F.col("n_salts") > 1).alias("is_salted"))
-    )
-    if need_count:
-        # Per-conversation budgeted token set, hashed to longs for a
-        # compact array payload (≤ K × 8 bytes; collision odds within one
-        # pair's ≤2K-element universe ~ K²/2⁶⁴ — immaterial). The window
-        # partitions on conv_id, which postings() already partitioned by
-        # for the per-conv budget → no additional exchange. With the
-        # budget disabled the set is instead truncated to the
-        # toks_payload_cap smallest hashes (bottom-k sketch — undercount
-        # only; see config.py) so the payload stays bounded (ADVICE r3).
-        w = Window.partitionBy("conv_id")
-        toks = F.sort_array(F.collect_set(F.xxhash64("token")).over(w))
-        if not cfg.max_block_tokens_per_conv:
-            toks = F.slice(toks, 1, cfg.toks_payload_cap)
-        salted = salted.withColumn("toks", toks)
-    # Both sides of the self-join read this; materialized EAGERLY or the
-    # first downstream action schedules both sides before either has
-    # populated a lazy cache and the postings plan (tokenize + distinct
-    # + window) runs twice concurrently. Checkpointing also truncates
-    # lineage, so the self-join's driver-side planning sees a LogicalRDD
-    # instead of the full upstream DAG (see plans/pipeline.py ckpt
-    # docstring). cfg.reliable_checkpoint upgrades this to a durable
-    # checkpoint (materialize.py) so executor loss mid-join is
-    # survivable on a real cluster.
-    from ..materialize import materialize
 
-    salted = materialize(salted, cfg, eager=True)
+    def salted(p: DataFrame) -> DataFrame:
+        n_salts = F.greatest(
+            F.ceil(F.col("df") / F.lit(cfg.salt_bucket)).cast("int"), F.lit(1)
+        )
+        cols = ["token", "salt", "conv_id"]
+        if cfg.admit_single_salted:
+            cols.append("n_salts")  # the bypass budget scales per sub-block
+        s = (
+            p.withColumn("n_salts", n_salts)
+            .withColumn("salt", F.pmod(F.xxhash64("conv_id"), F.col("n_salts")).cast("int"))
+            .select(*cols, (F.col("n_salts") > 1).alias("is_salted"))
+        )
+        if need_count:
+            # Per-conversation budgeted token set, hashed to longs for a
+            # compact array payload (≤ K × 8 bytes; collision odds within
+            # one pair's ≤2K-element universe ~ K²/2⁶⁴ — immaterial). The
+            # window partitions on conv_id, which postings() already
+            # partitioned by for the per-conv budget → no additional
+            # exchange. With the budget disabled the set is instead
+            # truncated to the toks_payload_cap smallest hashes (bottom-k
+            # sketch — undercount only; see config.py) so the payload
+            # stays bounded (ADVICE r3).
+            w = Window.partitionBy("conv_id")
+            toks = F.sort_array(F.collect_set(F.xxhash64("token")).over(w))
+            if not cfg.max_block_tokens_per_conv:
+                toks = F.slice(toks, 1, cfg.toks_payload_cap)
+            s = s.withColumn("toks", toks)
+        return s
 
-    a = salted.alias("a")
-    b = salted.alias("b")
-    matched = a.join(
-        b,
+    if new is None:
+        # Both sides of the self-join read this; materialized EAGERLY or
+        # the first downstream action schedules both sides before either
+        # has populated a lazy cache and the postings plan (tokenize +
+        # distinct + window) runs twice concurrently. Checkpointing also
+        # truncates lineage, so the self-join's driver-side planning sees
+        # a LogicalRDD instead of the full upstream DAG (see
+        # plans/pipeline.py ckpt docstring). cfg.reliable_checkpoint
+        # upgrades this to a durable checkpoint (materialize.py) so
+        # executor loss mid-join is survivable on a real cluster.
+        from ..materialize import materialize
+
+        a = b = materialize(salted(post), cfg, eager=True)
+        pair_order = F.col("a.conv_id") < F.col("b.conv_id")
+    else:
+        new_df = new.select("token", "df").distinct()
+        a = salted(new)
+        b = salted(post.drop("df").join(new_df, "token"))
+        pair_order = F.col("a.conv_id") != F.col("b.conv_id")
+
+    matched = a.alias("a").join(
+        b.alias("b"),
         on=[
             F.col("a.token") == F.col("b.token"),
             F.col("a.salt") == F.col("b.salt"),
-            F.col("a.conv_id") < F.col("b.conv_id"),
+            pair_order,
         ],
     )
+    # new↔new pairs arrive in both join directions; least/greatest plus
+    # one distinct folds them (a no-op reorder on the batch path)
+    lo = F.least(F.col("a.conv_id"), F.col("b.conv_id"))
+    hi = F.greatest(F.col("a.conv_id"), F.col("b.conv_id"))
+
     def pair_ids(m: DataFrame) -> DataFrame:
-        return m.select(
-            F.col("a.conv_id").alias("conv_id_a"),
-            F.col("b.conv_id").alias("conv_id_b"),
-        )
+        return m.select(lo.alias("conv_id_a"), hi.alias("conv_id_b"))
 
     if need_count:
         # Pair-level true count, evaluated per matched row pre-aggregation
@@ -193,10 +228,12 @@ def candidate_pairs(post: DataFrame, cfg: PipelineConfig | None = None) -> DataF
             # salt) sub-block keeps at most ceil(budget / n_salts) such
             # pairs, so a token of any df admits ≤ budget + n_salts
             # bypass pairs (see config.single_salted_pair_budget). The
-            # row_number window partitions on (token, salt) — bounded at
+            # rank window partitions on (token, salt) — bounded at
             # salt_bucket²/2 rows — and orders by xxhash64(pair) so the
-            # kept subset is deterministic. Threshold-qualified pairs
-            # are never budgeted.
+            # kept subset is deterministic. dense_rank, not row_number:
+            # the incremental form sees a new↔new pair from both join
+            # directions, and both rows must take one budget slot.
+            # Threshold-qualified pairs are never budgeted.
             per_block_cap = F.greatest(
                 F.ceil(
                     F.lit(cfg.single_salted_pair_budget) / F.col("a.n_salts")
@@ -204,13 +241,11 @@ def candidate_pairs(post: DataFrame, cfg: PipelineConfig | None = None) -> DataF
                 F.lit(1),
             )
             wb = Window.partitionBy(F.col("a.token"), F.col("a.salt")).orderBy(
-                F.xxhash64(F.col("a.conv_id"), F.col("b.conv_id")),
-                F.col("a.conv_id"),
-                F.col("b.conv_id"),
+                F.xxhash64(lo, hi), lo, hi
             )
             bypass = (
                 matched.filter(~qualifies & F.col("a.is_salted"))
-                .withColumn("rk", F.row_number().over(wb))
+                .withColumn("rk", F.dense_rank().over(wb))
                 .filter(F.col("rk") <= per_block_cap)
             )
             return (

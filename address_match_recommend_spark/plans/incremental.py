@@ -18,9 +18,14 @@ Strategy (anti-join + re-cluster of affected blocks, SURVEY §2.10):
    is NOT refit per batch — identical to the reference, which computes IDF
    from the stored corpus, and it keeps old vectors valid. Refit on a
    cadence (e.g. after corpus grows 2×) with a full run.
-4. Candidate pairs = new postings ⋈ (old ∪ new) postings on blocking
-   token — only blocks CONTAINING a new conversation produce pairs; the
-   old corpus's pairs are never regenerated.
+4. Candidate pairs come from the batch path's own operator,
+   ``operators.blocking.candidate_pairs(old ∪ new postings, new=new
+   postings)``: the new side joins the all side on salted (token, salt)
+   keys, so only blocks CONTAINING a new conversation produce pairs and
+   the old corpus's pairs are never regenerated. Salting, the true
+   shared-token count and the single-salted bypass budget are the batch
+   path's: a pair whose shared tokens are all hot forms only inside one
+   salt sub-block, on either path.
 5. Re-clustering is LOCALIZED to components the batch touches (round 5):
    the prior clustering of an entity re-enters as star edges
    (conv_id → entity_id, connectivity-equivalent to its full old edge
@@ -61,7 +66,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..config import PipelineConfig
 from ..functions.tokenize import explode_tokens
 from ..materialize import materialize
-from ..operators.blocking import postings as build_postings
+from ..operators.blocking import candidate_pairs, postings as build_postings
 from ..operators.canonicalize import canonicalize
 from ..operators.clustering import connected_components
 from ..operators.dedup import dedup_exact
@@ -221,28 +226,13 @@ def incremental_update(
         .unionByName(unseen_df.select("token", "df", "idf", "clamped"))
     )
 
-    # 4. pairs only from blocks containing a new conversation
-    new_post = build_postings(new_tokens, blocking_idf, cfg)
+    # 4. pairs only from blocks containing a new conversation — the batch
+    #    path's operator, new side ⋈ all side (operators/blocking.py).
+    #    new_post is read by the all-side union, by both sides of the
+    #    pair join and by the caller's delta write: materialize it once.
+    new_post = materialize(build_postings(new_tokens, blocking_idf, cfg), cfg)
     all_post = materialize(prev_postings.unionByName(new_post), cfg)
-    postings_new_side = new_post.select(
-        "token", F.col("conv_id").alias("new_id")
-    )
-    matched = (
-        postings_new_side.join(all_post, "token")
-        .filter(F.col("new_id") != F.col("conv_id"))
-        .select(
-            "token",
-            F.least("new_id", "conv_id").alias("conv_id_a"),
-            F.greatest("new_id", "conv_id").alias("conv_id_b"),
-        )
-        .distinct()  # new↔new pairs arrive in both join directions
-    )
-    pairs = (
-        matched.groupBy("conv_id_a", "conv_id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= max(cfg.min_shared_tokens, 1))
-        .drop("n_shared")
-    )
+    pairs = candidate_pairs(all_post, cfg, new=new_post)
 
     # old-side vectors: only partners that actually appear in a pair
     partner_ids = (

@@ -17,13 +17,15 @@ expensive runs. Exact-dup edges re-enter at the clustering stage.
 
 Driver-constant control (round 4): the DAG has two independent branches
 after tokenization — tokens → vectors and tokens → idf → postings →
-candidate pairs — that only re-join at scoring. Under
-``cfg.concurrent_stages`` (default) they are submitted from two driver
-threads, so their per-stage driver constants (Catalyst/AQE planning,
-scheduling — the Amdahl term the N→4N scaling proxy pays at every core
-count) overlap instead of summing, and their tasks share executor slots
-(FAIR scheduler pools, session.py). ``reps.count()`` likewise overlaps
-with the tokenize materialization.
+candidate pairs — that only re-join at scoring. Whenever both run they
+are submitted from two driver threads, so their per-stage driver
+constants (Catalyst/AQE planning, scheduling — the Amdahl term the N→4N
+scaling proxy pays at every core count) overlap instead of summing, and
+their tasks share executor slots (FAIR scheduler pools, session.py).
+Measured on the ``batch-dense`` benchmark workload on a 4-core host (10
+alternating pairs), a sequential schedule was 15% slower (median
+er_wall_s 8.96 s → 10.34 s), so the sequential code is only reached by
+``until`` stops before ``candidate_pairs``.
 """
 
 from __future__ import annotations
@@ -143,27 +145,24 @@ def run_pipeline(
           either pass a Checkpointer (durable parquet, resumable) or set
           ``cfg.reliable_checkpoint=True`` (durable rdd checkpoint at
           the same call sites, materialize.py).
-        - ``lazy``   — persist only; the first downstream action fills
-          the cache. Safe for single-read-per-action fan-outs ONLY under
-          sequential submission (idf is read once inside the vectors
-          action, then postings hits the warm cache; edges is read once
-          by the CC loop's checkpoint) — concurrent branches instead get
-          ``eager`` for any frame both branches consume.
         - ``pre``    — the thunk already materialized its result
           (score_pairs persists+counts internally for its
           confident/borderline split); a second barrier here would pay
           an extra cached scan + JW pass per run.
-        - ``none``   — no persist: exactly one downstream consumer which
-          materializes internally (postings is consumed only by
-          candidate_pairs, which persists the derived salted frame).
+        - ``none``   — no materialization: exactly one downstream
+          consumer, which materializes internally (postings is consumed
+          only by candidate_pairs, which checkpoints the derived salted
+          frame; edges only by connected_components, which checkpoints
+          its own copy before its loop).
+
+        No mode persists: a persisted frame would stay in the session's
+        cache manager after the run returns.
         """
         t0 = time.monotonic()
         if checkpointer is None:
             out = thunk()
             if mode == "eager":
                 out = materialize(out, cfg, eager=True)
-            elif mode == "lazy":
-                out = out.persist()
         elif checkpointer.is_complete(name):
             out = checkpointer.stage(name, None)
         else:
@@ -193,24 +192,7 @@ def run_pipeline(
     if not want("tokenize"):
         return result()
 
-    # Concurrent submission is pointless unless both post-tokenize
-    # branches actually run. It works under a durable Checkpointer too
-    # (round 5): the ledger writes one subdirectory per stage, so the two
-    # branches' appends never share a parquet _temporary commit dir
-    # (sources/checkpoint.py::_ledger) — a cluster run gets resumability
-    # AND overlapped driver constants (VERDICT r4 next #4).
-    parallel = cfg.concurrent_stages and want("candidate_pairs")
-    pool = None
-    if parallel:
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=2)
-
     t_tok = time.monotonic()
-    # n_docs is a one-row aggregate over the already-materialized reps —
-    # overlapped with the tokenize materialization below instead of
-    # holding its own driver-synchronized slot (VERDICT r3 next #1).
-    fut_ndocs = pool.submit(reps.count) if parallel else None
     if cfg.use_structure:
         # reference C14: typed structural terms (role:/tool:/nturns:) join
         # the token namespace and each token's weight is scaled by its
@@ -228,73 +210,58 @@ def run_pipeline(
         # strings. coord_density parity mode keeps strings — its is_text
         # split reads token text off the vec keys (operators/scoring.py).
         tokens = tokens.withColumn("token", F.xxhash64("token"))
-    if checkpointer is None and cfg.materialize_tokens:
-        # Opt-in only (cfg.materialize_tokens): checkpointing the ~200×
-        # exploded stream is a bandwidth-bound block write that no core
-        # count speeds up — the default recomputes the cheap explode
-        # inside each consumer's map side instead (idf's distinct,
-        # vectors' conv_id repartition, postings' distinct all open with
-        # a shuffle, so the explode fuses into tasks that already run).
-        # Each consumer still plans against a LogicalRDD — reps, one
-        # narrow projection below it.
-        tokens = materialize(tokens, cfg, eager=True)
-    n_docs = fut_ndocs.result() if parallel else reps.count()
+    # tokens stays a lazy projection of the materialized reps: checkpointing
+    # the ~200× exploded stream is a bandwidth-bound block write that no
+    # core count speeds up (round 4: 60-82 s at 50k entities against ≤10 s
+    # to recompute), so each consumer (idf's distinct, vectors' conv_id
+    # repartition, postings' distinct) re-runs the explode inside the map
+    # side of the shuffle it opens with.
+    n_docs = reps.count()
     stage_sec["tokenize"] = round(time.monotonic() - t_tok, 3)
     if not want("idf"):
         return result()
 
-    # Under concurrent branches idf must be EAGER: both branches read it,
-    # and a lazily-persisted frame raced from two threads computes its
-    # plan twice before either populates the cache. Sequential runs keep
-    # the cheaper lazy persist (one consumer fills it for the next).
-    idf = fields["idf"] = ckpt(
-        "idf",
-        lambda: idf_table(tokens, n_docs, cfg),
-        mode="eager" if parallel else "lazy",
-    )
+    # EAGER: both branches read idf, and a lazily cached frame raced from
+    # two threads computes its plan twice before either populates it.
+    idf = fields["idf"] = ckpt("idf", lambda: idf_table(tokens, n_docs, cfg))
     if not want("vectors"):
         return result()
 
-    if parallel:
-        spark = transcripts.sparkSession
-
-        def vec_branch() -> DataFrame:
-            # distinct FAIR pools so neither branch's stages queue behind
-            # the other's under the session-wide scheduler (session.py)
-            spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", "branch-vectors"
+    if not want("candidate_pairs"):
+        fields["vectors"] = ckpt("vectors", lambda: tfidf_vectors(tokens, idf, cfg))
+        if want("postings"):
+            fields["postings"] = ckpt(
+                "postings", lambda: postings(tokens, idf, cfg), mode="none"
             )
-            return ckpt("vectors", lambda: tfidf_vectors(tokens, idf, cfg))
+        return result()
 
-        def pair_branch() -> tuple[DataFrame, DataFrame]:
-            spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", "branch-pairs"
-            )
-            p = ckpt("postings", lambda: postings(tokens, idf, cfg), mode="none")
-            return p, ckpt("candidate_pairs", lambda: candidate_pairs(p, cfg))
+    # Both post-tokenize branches run: submit them concurrently. This works
+    # under a durable Checkpointer too (round 5): the ledger writes one
+    # subdirectory per stage, so the two branches' appends never share a
+    # parquet _temporary commit dir (sources/checkpoint.py::_ledger) — a
+    # cluster run gets resumability AND overlapped driver constants
+    # (VERDICT r4 next #4).
+    from concurrent.futures import ThreadPoolExecutor
 
+    spark = transcripts.sparkSession
+
+    def vec_branch() -> DataFrame:
+        # distinct FAIR pools so neither branch's stages queue behind
+        # the other's under the session-wide scheduler (session.py)
+        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "branch-vectors")
+        return ckpt("vectors", lambda: tfidf_vectors(tokens, idf, cfg))
+
+    def pair_branch() -> tuple[DataFrame, DataFrame]:
+        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "branch-pairs")
+        p = ckpt("postings", lambda: postings(tokens, idf, cfg), mode="none")
+        return p, ckpt("candidate_pairs", lambda: candidate_pairs(p, cfg))
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
         fut_vec = pool.submit(vec_branch)
         fut_pairs = pool.submit(pair_branch)
-        try:
-            vectors = fields["vectors"] = fut_vec.result()
-            post, pairs = fut_pairs.result()
-            fields["postings"], fields["pairs"] = post, pairs
-        finally:
-            pool.shutdown(wait=True)
-    else:
-        vectors = fields["vectors"] = ckpt(
-            "vectors", lambda: tfidf_vectors(tokens, idf, cfg)
-        )
-        if not want("postings"):
-            return result()
-        post = fields["postings"] = ckpt(
-            "postings", lambda: postings(tokens, idf, cfg), mode="none"
-        )
-        if not want("candidate_pairs"):
-            return result()
-        pairs = fields["pairs"] = ckpt(
-            "candidate_pairs", lambda: candidate_pairs(post, cfg)
-        )
+        vectors = fields["vectors"] = fut_vec.result()
+        post, pairs = fut_pairs.result()
+        fields["postings"], fields["pairs"] = post, pairs
     if not want("scored_pairs"):
         return result()
 
@@ -317,7 +284,7 @@ def run_pipeline(
         lambda: scored.filter(F.col("is_match"))
         .select("conv_id_a", "conv_id_b")
         .unionByName(dup_edges),
-        mode="lazy",
+        mode="none",
     )
     if not want("clusters"):
         return result()

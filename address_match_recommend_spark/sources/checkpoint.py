@@ -38,21 +38,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-
-#: dependency order of run_pipeline's stages — invalidating stage k
-#: cascades to every stage after it (a mid-pipeline recompute must never
-#: be mixed with stale downstream checkpoints)
-PIPELINE_STAGE_ORDER = (
-    "conversations",
-    "representatives",
-    "idf",
-    "vectors",
-    "postings",
-    "candidate_pairs",
-    "scored_pairs",
-    "edges",
-    "clusters",
-)
+from ..plans.pipeline import STAGE_ORDER
 
 
 class Checkpointer:
@@ -68,7 +54,7 @@ class Checkpointer:
         root: str,
         run_id: str = "run0",
         fmt: str = "parquet",
-        stage_order: tuple[str, ...] = PIPELINE_STAGE_ORDER,
+        stage_order: tuple[str, ...] = STAGE_ORDER,
     ) -> None:
         self.spark = spark
         self.root = root.rstrip("/")
@@ -84,7 +70,7 @@ class Checkpointer:
 
     def _ledger(self, name: str, stage: str) -> str:
         # One subdirectory per stage (round 5): ledger appends from
-        # CONCURRENT pipeline branches (cfg.concurrent_stages) land in
+        # CONCURRENT pipeline branches (plans/pipeline.py) land in
         # distinct directories, so two stages finishing together never
         # race on a shared parquet _temporary commit dir — the conflict
         # that previously forced checkpointed runs to be sequential

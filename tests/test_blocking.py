@@ -135,6 +135,25 @@ def test_candidate_pairs_plan_shape(spark, block_input):
     assert "array_intersect" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
+    # the incremental form (new side ⋈ all side) shares the in-join
+    # count: no aggregate sits between the pair join and the
+    # array_intersect filter, i.e. raw matched rows are never grouped
+    new = post.filter(F.col("conv_id").isin("d2", "d4"))
+    lines = (
+        candidate_pairs(post, cfg, new=new)
+        ._jdf.queryExecution().executedPlan().toString().splitlines()
+    )
+    counted = min(i for i, ln in enumerate(lines) if "array_intersect" in ln)
+    pair_join = min(
+        i for i, ln in enumerate(lines)
+        if "Join" in ln and "conv_id" in ln and "salt" in ln
+    )
+    assert counted <= pair_join, "\n".join(lines)
+    assert not any(
+        "HashAggregate" in ln for ln in lines[counted:pair_join]
+    ), "\n".join(lines)
+    assert not any("Python" in ln for ln in lines)
+
 
 def test_toks_payload_capped_without_budget(spark):
     """With the per-conv budget DISABLED and min_shared_tokens>1, the
@@ -201,6 +220,12 @@ def test_single_salted_bypass_budget(spark):
     # deterministic across runs
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, candidate_pairs(post, cfg_on).collect())
+    )
+    # the incremental form with every conversation new meets each pair
+    # from both join directions; the budget still counts distinct pairs,
+    # so it keeps exactly the batch path's subset
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, candidate_pairs(post, cfg_on, new=post).collect())
     )
     # mode off: single-shared-salted-token pairs below threshold drop
     post_off = postings(tokens, idf_table(tokens, n, cfg_off), cfg_off)

@@ -227,3 +227,28 @@ def test_unseen_hot_token_capped_by_cumulative_df(spark):
     # already-indexed hotzz conversations
     assert inc1.new_postings.filter(F.col("token") == "hotzz").count() == 0
     assert inc1.new_pairs.count() == 0
+
+
+def test_hot_token_pairs_match_batch_operator(spark):
+    """The stream path pairs by the batch path's rules: on a corpus whose
+    hot tokens' df crosses salt_bucket, the incremental pairs equal the
+    batch candidate_pairs over the same postings, restricted to pairs
+    with a new endpoint — pairs whose shared tokens are all hot form only
+    inside one salt sub-block, whichever path generated them."""
+    from address_match_recommend_spark.config import PipelineConfig
+    from address_match_recommend_spark.operators.blocking import candidate_pairs
+
+    cfg = PipelineConfig(salt_bucket=5, max_block_df=500)
+    old = _tr(spark, [(f"o{i:02d}", f"hotaa hotbb olduniq{i:02d}") for i in range(20)])
+    new = _tr(spark, [(f"n{i:02d}", f"hotaa hotbb newuniq{i:02d}") for i in range(6)])
+    prev = run_pipeline(old, cfg)
+    inc = incremental_update(
+        prev.conversations, prev.representatives, prev.idf,
+        prev.postings, prev.clusters, new, cfg,
+    )
+    got = {tuple(r) for r in inc.new_pairs.collect()}
+    batch = {tuple(r) for r in candidate_pairs(inc.postings, cfg).collect()}
+    want = {p for p in batch if p[0].startswith("n") or p[1].startswith("n")}
+    assert got == want
+    # the hot tokens really split the new-endpoint pairs across sub-blocks
+    assert 0 < len(want) < 6 * 20 + 6 * 5 / 2

@@ -103,17 +103,6 @@ def test_until_stops_stage_execution(spark, tiny_tables):
         run_pipeline(tiny_tables["transcripts"], until="nope")
 
 
-def test_concurrent_equals_sequential(spark, tiny_tables):
-    """Concurrent branch submission (cfg.concurrent_stages, default) is a
-    scheduling change only — clusters must be identical to sequential."""
-    par = run_pipeline(tiny_tables["transcripts"], PipelineConfig(concurrent_stages=True))
-    seq = run_pipeline(tiny_tables["transcripts"], PipelineConfig(concurrent_stages=False))
-    assert sorted(map(tuple, par.clusters.collect())) == sorted(
-        map(tuple, seq.clusters.collect())
-    )
-    assert par.metrics["n_docs"] == seq.metrics["n_docs"]
-
-
 def test_reliable_checkpoint_pipeline(spark, tiny_tables, tmp_path):
     """cfg.reliable_checkpoint swaps every localCheckpoint for a durable
     rdd checkpoint (materialize.py); results must be unchanged and the

@@ -545,10 +545,11 @@ def test_compact_folds_chain_into_new_base(spark, er_state):
 
 
 def test_apply_batch_leaves_session_cache_empty(spark, tiny_corpus, tmp_path):
-    """A micro-batch must not leave cached frames behind: persisted
-    frames stay in the session's cache manager until unpersisted, so a
-    long-lived streaming session would grow it by every batch's reused
-    frames. Checkpointed frames (materialize.py) do not enter it."""
+    """Neither the bootstrap pipeline run nor a micro-batch may leave
+    cached frames behind: persisted frames stay in the session's cache
+    manager until unpersisted, so a long-lived streaming session would
+    grow it by every batch's reused frames. Checkpointed frames
+    (materialize.py) do not enter it."""
     from address_match_recommend_spark.datagen import TRANSCRIPTS_DDL
     from address_match_recommend_spark.streaming.incremental import StreamingER
 
@@ -560,7 +561,6 @@ def test_apply_batch_leaves_session_cache_empty(spark, tiny_corpus, tmp_path):
 
     er = StreamingER(spark, str(tmp_path / "state"))
     er.bootstrap(spark.createDataFrame(tr[~in_batch], schema=TRANSCRIPTS_DDL))
-    spark.catalog.clearCache()
     cache = spark._jsparkSession.sharedState().cacheManager()
     assert cache.isEmpty()
     for batch_id, ents in enumerate(batches):
